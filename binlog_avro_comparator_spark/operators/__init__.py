@@ -6,9 +6,7 @@ from .compare import (
     matched_pairs,
     avro_only,
     binlog_only,
-    findings,
     findings_onepass,
-    summary,
     summary_onepass,
 )
 
@@ -20,8 +18,6 @@ __all__ = [
     "matched_pairs",
     "avro_only",
     "binlog_only",
-    "findings",
     "findings_onepass",
-    "summary",
     "summary_onepass",
 ]

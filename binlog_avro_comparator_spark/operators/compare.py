@@ -4,24 +4,29 @@ Re-expresses the reference's single-threaded hash-join-and-compare
 (/root/reference/compare_timestamps.go) as declarative DataFrame
 transformations, SURVEY.md section 2 operator IDs in comments:
 
-  prepare_binlog  -- F1 relevance filter, F2 null-key drop, J2
-                     last-write-wins dedup (explicit window over line_no;
-                     never rely on scan order)
-  prepare_avro    -- F3 null-key drop
-  matched_pairs   -- J1/J3 composite-key inner join + C1-C5 comparison
-                     columns
-  avro_only       -- J4 left-anti join
-  binlog_only     -- J5 right-anti join + F4 DML-only filter
-  findings        -- S10 report-as-data: one row per discrepancy
-  summary         -- A1 conditional-count aggregation + A2 verdict
+  prepare_binlog   -- F1 relevance filter, F2 null-key drop, J2
+                      last-write-wins dedup (explicit window over line_no;
+                      never rely on scan order)
+  prepare_avro     -- F3 null-key drop
+  diff_joined      -- J1/J3-J5 in one full-outer composite-key join with
+                      presence markers + C1-C5 comparison columns
+  matched_pairs    -- J3: the same columns over the inner join
+  avro_only        -- J4 left-anti join
+  binlog_only      -- J5 right-anti join + F4 DML-only filter
+  findings_onepass -- S10 report-as-data: one row per discrepancy
+  summary_onepass  -- A1 conditional-count aggregation + A2 verdict
 
-Scale design: the three joins share one shuffle key (binlog_file,
-binlog_position).  At 100 TB both sides are large, so the default lets
-Catalyst/AQE pick the physical join (sort-merge with both sides hash-
-partitioned on the key; AQE converts to broadcast when a side turns out
-small, and splits skewed keys).  ``CompareConfig.broadcast_build=True``
-forces the reference's asymmetry (bounded binlog build side) when the
-caller knows it holds.  All comparison expressions are built-in column
+One set of comparison rules: ``_compared`` builds the join, presence
+markers and comparison columns; ``_explode_findings`` builds the six
+finding structs.  Batch findings, the summary, matched pairs, the
+per-table and per-minute scorecards, and the stream-static diff
+(streaming/compare_stream.py) all take them from there.
+
+Scale design: every diff is one join on the shuffle key (binlog_file,
+binlog_position).  At 100 TB both sides are large, so Catalyst/AQE
+picks the physical join (sort-merge with both sides hash-partitioned
+on the key; AQE converts to broadcast when a side turns out small, and
+splits skewed keys).  All comparison expressions are built-in column
 functions -- whole-stage-codegen, no Python in the hot path.
 
 Note the reference counts *per probe row*: duplicate avro keys each
@@ -72,9 +77,6 @@ class CompareConfig:
     # 'DeleteRowsV2' never matches 'DeleteRowsEventV2').  Default is the
     # *intended* semantics; strict mode reproduces the quirk.
     strict_reference_parity: bool = False
-    # None -> let Catalyst/AQE choose; True -> broadcast the binlog
-    # (build) side like the reference's in-memory map (:73).
-    broadcast_build: bool | None = None
 
 
 def prepare_binlog(binlog: DataFrame) -> DataFrame:
@@ -159,22 +161,18 @@ def inferred_change_type(event_type: F.Column, cfg: CompareConfig) -> F.Column:
     )
 
 
-def diff_joined(
+def _compared(
     binlog_prepared: DataFrame,
     avro_prepared: DataFrame,
-    cfg: CompareConfig = CompareConfig(),
+    cfg: CompareConfig,
+    how: str,
 ) -> DataFrame:
-    """The whole diff in ONE join: full-outer on the composite key with
-    presence markers, plus the C1-C5 comparison columns.
-
-    This subsumes J3 (both present), J4 (binlog side absent), and J5
-    (avro side absent): findings and summary each become a single pass
-    over this frame instead of three separate joins that would rescan
-    and re-shuffle both inputs.  At scale: one shuffle per side
-    (sort-merge full-outer); the narrower inner/anti operators below
-    stay available -- and broadcastable -- when only one slice is
-    wanted.
-    """
+    """The comparison kernel every CDC diff shares: the avro probe joined
+    to the binlog build side on the composite key, with presence markers
+    (``__has_avro`` / ``__has_binlog``, NULL on the absent side) and the
+    C1-C5 comparison columns.  ``how`` picks the slice: full_outer for
+    the batch diff, inner for matched pairs, left_outer for the
+    stream-static diff (whose binlog-only side is end-of-stream)."""
     build = binlog_prepared.select(
         *KEY,
         "event_type",
@@ -187,7 +185,7 @@ def diff_joined(
         F.lit(True).alias("__has_binlog"),
     )
     probe = avro_prepared.withColumn("__has_avro", F.lit(True))
-    j = probe.join(build, on=KEY, how="full_outer")
+    j = probe.join(build, on=KEY, how=how)
 
     binlog_ms = binlog_effective_ms(
         F.col("immediate_commmit_timestamp"), F.col("timestamp")
@@ -219,59 +217,131 @@ def diff_joined(
     )
 
 
+# Row classes over a ``_compared`` frame (J3 / J4 / J5 + F4).
+def _is_matched() -> F.Column:
+    return F.col("__has_avro").isNotNull() & F.col("__has_binlog").isNotNull()
+
+
+def _is_avro_only() -> F.Column:
+    return F.col("__has_binlog").isNull()
+
+
+def _is_binlog_only() -> F.Column:
+    return F.col("__has_avro").isNull() & F.col("event_type").endswith(_DML_SUFFIX)
+
+
+def _explode_findings(j: DataFrame) -> DataFrame:
+    """S10 report-as-data over a ``_compared`` frame: a per-row array of
+    finding structs, exploded once -- a row can carry several findings.
+
+    ``counted`` mirrors Q3: only timestamp failures and missing rows
+    feed the summary's counters; GTID/change-type findings are
+    report-only (the commented-out increments at
+    compare_timestamps.go:228,:245)."""
+    empty = F.lit("")
+    both = _is_matched()
+
+    def _f(cond: F.Column, kind: str, detail: F.Column, counted: bool) -> F.Column:
+        return F.when(
+            cond,
+            F.struct(
+                F.lit(kind).alias("kind"),
+                detail.alias("detail"),
+                F.lit(counted).alias("counted"),
+            ),
+        )
+
+    arr = F.array(
+        _f(
+            both & F.col("binlog_ms").isNull(),
+            "TIMESTAMP_PARSE_ERROR",
+            F.concat(
+                F.lit("ict="), F.coalesce(F.col("immediate_commmit_timestamp"), empty),
+                F.lit(" ts="), F.coalesce(F.col("timestamp"), empty),
+            ),
+            True,
+        ),
+        _f(
+            both & F.col("binlog_ms").isNotNull() & F.col("ts_mismatch"),
+            "TIMESTAMP_MISMATCH",
+            F.concat(
+                F.lit("avro_ms="), F.col("source_timestamp").cast("string"),
+                F.lit(" binlog_ms="), F.col("binlog_ms").cast("string"),
+            ),
+            True,
+        ),
+        _f(
+            both & F.col("gtid_mismatch"),
+            "GTID_MISMATCH",
+            F.concat(F.lit("avro="), F.col("gtid"), F.lit(" binlog="), F.col("gtid_next")),
+            False,
+        ),
+        _f(
+            both & F.col("change_type_mismatch"),
+            "CHANGE_TYPE_MISMATCH",
+            F.concat(
+                F.lit("avro="), F.col("change_type"),
+                F.lit(" inferred="), F.col("inferred_change_type"),
+            ),
+            False,
+        ),
+        _f(
+            _is_avro_only(),
+            "AVRO_ONLY_BINLOG_KEY",
+            F.concat(
+                F.lit("db="), F.coalesce(F.col("database"), empty),
+                F.lit(" table="), F.coalesce(F.col("table"), empty),
+                F.lit(" type="), F.coalesce(F.col("change_type"), empty),
+            ),
+            True,
+        ),
+        _f(
+            _is_binlog_only(),
+            "BINLOG_ONLY_DML",
+            F.concat(
+                F.lit("event="), F.col("event_type"),
+                F.lit(" schema="), F.coalesce(F.col("binlog_schema"), empty),
+                F.lit(" table="), F.coalesce(F.col("binlog_table"), empty),
+            ),
+            True,
+        ),
+    )
+    return j.select(
+        *KEY,
+        F.explode(F.filter(arr, lambda x: x.isNotNull())).alias("f"),
+    ).select(
+        F.col("f.kind").alias("kind"),
+        *KEY,
+        F.col("f.detail").alias("detail"),
+        F.col("f.counted").alias("counted"),
+    )
+
+
+def diff_joined(
+    binlog_prepared: DataFrame,
+    avro_prepared: DataFrame,
+    cfg: CompareConfig = CompareConfig(),
+) -> DataFrame:
+    """The whole diff in ONE join: full-outer on the composite key with
+    presence markers, plus the C1-C5 comparison columns.
+
+    This subsumes J3 (both present), J4 (binlog side absent), and J5
+    (avro side absent): findings, summary and the scorecards each become
+    a single pass over this frame instead of three separate joins that
+    would rescan and re-shuffle both inputs.  At scale: one shuffle per
+    side (sort-merge full-outer)."""
+    return _compared(binlog_prepared, avro_prepared, cfg, "full_outer")
+
+
 def matched_pairs(
     binlog_prepared: DataFrame,
     avro_prepared: DataFrame,
     cfg: CompareConfig = CompareConfig(),
 ) -> DataFrame:
     """J3 inner join + C1-C5 comparison columns, one row per matched
-    avro record (probe-side granularity, like the reference).
-
-    Narrow variant: when only the matched slice is needed, an inner
-    join lets Catalyst/AQE broadcast the build side (cfg.broadcast_build
-    forces it, mirroring the reference's in-memory map)."""
-    build = binlog_prepared.select(
-        *KEY,
-        "event_type",
-        "timestamp",
-        "immediate_commmit_timestamp",
-        "gtid_next",
-        F.col("schema").alias("binlog_schema"),
-        F.col("table").alias("binlog_table"),
-    )
-    if cfg.broadcast_build:
-        build = F.broadcast(build)
-    j = avro_prepared.join(build, on=KEY, how="inner")
-
-    binlog_ms = binlog_effective_ms(
-        F.col("immediate_commmit_timestamp"), F.col("timestamp")
-    )
-    inferred = inferred_change_type(F.col("event_type"), cfg)
-    j = (
-        j.withColumn("binlog_ms", binlog_ms)
-        .withColumn("ts_delta_ms", F.col("source_timestamp") - F.col("binlog_ms"))
-        .withColumn(
-            "ts_mismatch",
-            F.col("binlog_ms").isNull()
-            | (F.abs(F.col("ts_delta_ms")) > cfg.tolerance_ms),
-        )
-        .withColumn("inferred_change_type", inferred)
-        .withColumn(
-            "gtid_mismatch",
-            F.col("binlog_ms").isNotNull()  # parse failure skips checks (:210)
-            & F.col("gtid").isNotNull() & (F.col("gtid") != "")
-            & F.col("gtid_next").isNotNull() & (F.col("gtid_next") != "")
-            & (F.col("gtid") != F.col("gtid_next")),
-        )
-        .withColumn(
-            "change_type_mismatch",
-            F.col("binlog_ms").isNotNull()
-            & F.col("change_type").isNotNull() & (F.col("change_type") != "")
-            & (F.col("inferred_change_type") != "")
-            & (F.upper(F.col("change_type")) != F.col("inferred_change_type")),
-        )
-    )
-    return j
+    avro record (probe-side granularity, like the reference).  The
+    inner join lets Catalyst/AQE broadcast a small build side."""
+    return _compared(binlog_prepared, avro_prepared, cfg, "inner")
 
 
 def avro_only(binlog_prepared: DataFrame, avro_prepared: DataFrame) -> DataFrame:
@@ -293,91 +363,11 @@ def findings_onepass(
     avro_prepared: DataFrame,
     cfg: CompareConfig = CompareConfig(),
 ) -> DataFrame:
-    """S10 findings in a single pass: build a per-row array of finding
-    structs over diff_joined and explode it.  One scan per input, one
-    join, one explode -- versus the compositional findings() whose union
-    branches each re-derive their inputs.  Output schema and row set are
-    identical to findings()."""
-    j = diff_joined(binlog_prepared, avro_prepared, cfg)
-    empty = F.lit("")
-    both = F.col("__has_avro").isNotNull() & F.col("__has_binlog").isNotNull()
-
-    def _f(cond: F.Column, kind: str, detail: F.Column, counted: bool) -> F.Column:
-        return F.when(
-            cond,
-            F.struct(
-                F.lit(kind).alias("kind"),
-                detail.alias("detail"),
-                F.lit(counted).alias("counted"),
-            ),
-        )
-
-    ts_detail = F.concat(
-        F.lit("avro_ms="), F.col("source_timestamp").cast("string"),
-        F.lit(" binlog_ms="), F.col("binlog_ms").cast("string"),
-    )
-    arr = F.array(
-        _f(
-            both & F.col("binlog_ms").isNull(),
-            "TIMESTAMP_PARSE_ERROR",
-            F.concat(
-                F.lit("ict="), F.coalesce(F.col("immediate_commmit_timestamp"), empty),
-                F.lit(" ts="), F.coalesce(F.col("timestamp"), empty),
-            ),
-            True,
-        ),
-        _f(
-            both & F.col("binlog_ms").isNotNull() & F.col("ts_mismatch"),
-            "TIMESTAMP_MISMATCH",
-            ts_detail,
-            True,
-        ),
-        _f(
-            both & F.col("gtid_mismatch"),
-            "GTID_MISMATCH",
-            F.concat(F.lit("avro="), F.col("gtid"), F.lit(" binlog="), F.col("gtid_next")),
-            False,
-        ),
-        _f(
-            both & F.col("change_type_mismatch"),
-            "CHANGE_TYPE_MISMATCH",
-            F.concat(
-                F.lit("avro="), F.col("change_type"),
-                F.lit(" inferred="), F.col("inferred_change_type"),
-            ),
-            False,
-        ),
-        _f(
-            F.col("__has_binlog").isNull(),
-            "AVRO_ONLY_BINLOG_KEY",
-            F.concat(
-                F.lit("db="), F.coalesce(F.col("database"), empty),
-                F.lit(" table="), F.coalesce(F.col("table"), empty),
-                F.lit(" type="), F.coalesce(F.col("change_type"), empty),
-            ),
-            True,
-        ),
-        _f(
-            F.col("__has_avro").isNull()
-            & F.col("event_type").endswith(_DML_SUFFIX),
-            "BINLOG_ONLY_DML",
-            F.concat(
-                F.lit("event="), F.col("event_type"),
-                F.lit(" schema="), F.coalesce(F.col("binlog_schema"), empty),
-                F.lit(" table="), F.coalesce(F.col("binlog_table"), empty),
-            ),
-            True,
-        ),
-    )
-    return j.select(
-        *KEY,
-        F.explode(F.filter(arr, lambda x: x.isNotNull())).alias("f"),
-    ).select(
-        F.col("f.kind").alias("kind"),
-        *KEY,
-        F.col("f.detail").alias("detail"),
-        F.col("f.counted").alias("counted"),
-    )
+    """S10 findings in a single pass: one row per discrepancy, built as
+    a per-row array of finding structs over diff_joined and exploded.
+    One scan per input, one join, one explode.  Returns (kind,
+    binlog_file, binlog_position, detail, counted)."""
+    return _explode_findings(diff_joined(binlog_prepared, avro_prepared, cfg))
 
 
 def summary_onepass(
@@ -390,17 +380,12 @@ def summary_onepass(
     narrow count of the raw avro input, which the reference counts
     before key-validation -- compare_timestamps.go:169)."""
     j = diff_joined(binlog_prepared, avro_prepared, cfg)
-    both = F.col("__has_avro").isNotNull() & F.col("__has_binlog").isNotNull()
+    both = _is_matched()
     agg = j.agg(
         F.sum(both.cast("long")).alias("matched"),
         F.sum((both & F.col("ts_mismatch")).cast("long")).alias("ts_mismatches"),
-        F.sum(F.col("__has_binlog").isNull().cast("long")).alias("avro_only"),
-        F.sum(
-            (
-                F.col("__has_avro").isNull()
-                & F.col("event_type").endswith(_DML_SUFFIX)
-            ).cast("long")
-        ).alias("binlog_only"),
+        F.sum(_is_avro_only().cast("long")).alias("avro_only"),
+        F.sum(_is_binlog_only().cast("long")).alias("binlog_only"),
         # a build event may match several avro rows; count distinct keys
         F.count_distinct(
             F.when(F.col("__has_binlog").isNotNull(), F.concat_ws("\x00", *KEY))
@@ -422,122 +407,6 @@ def summary_onepass(
                 & (F.coalesce(F.col("binlog_only"), F.lit(0)) == 0)
             ).alias("consistent"),
         )
-    )
-
-
-def findings(
-    matched: DataFrame,
-    avro_only_df: DataFrame,
-    binlog_only_df: DataFrame,
-) -> DataFrame:
-    """S10: report-as-data.  One row per discrepancy.
-
-    ``counted`` mirrors Q3: only timestamp failures feed the summary's
-    ``mismatches`` counter; GTID/change-type findings are report-only
-    (the commented-out increments at compare_timestamps.go:228,:245).
-    """
-    empty = F.lit("")
-
-    def _mk(df: DataFrame, kind: str, detail: F.Column, counted: bool) -> DataFrame:
-        return df.select(
-            F.lit(kind).alias("kind"),
-            F.col("binlog_file"),
-            F.col("binlog_position"),
-            detail.alias("detail"),
-            F.lit(counted).alias("counted"),
-        )
-
-    ts_parse_err = _mk(
-        matched.filter(F.col("binlog_ms").isNull()),
-        "TIMESTAMP_PARSE_ERROR",
-        F.concat(
-            F.lit("ict="), F.coalesce(F.col("immediate_commmit_timestamp"), empty),
-            F.lit(" ts="), F.coalesce(F.col("timestamp"), empty),
-        ),
-        True,
-    )
-    ts_mismatch = _mk(
-        matched.filter(F.col("binlog_ms").isNotNull() & F.col("ts_mismatch")),
-        "TIMESTAMP_MISMATCH",
-        F.concat(
-            F.lit("avro_ms="), F.col("source_timestamp").cast("string"),
-            F.lit(" binlog_ms="), F.col("binlog_ms").cast("string"),
-        ),
-        True,
-    )
-    gtid = _mk(
-        matched.filter(F.col("gtid_mismatch")),
-        "GTID_MISMATCH",
-        F.concat(F.lit("avro="), F.col("gtid"), F.lit(" binlog="), F.col("gtid_next")),
-        False,
-    )
-    ct = _mk(
-        matched.filter(F.col("change_type_mismatch")),
-        "CHANGE_TYPE_MISMATCH",
-        F.concat(
-            F.lit("avro="), F.col("change_type"),
-            F.lit(" inferred="), F.col("inferred_change_type"),
-        ),
-        False,
-    )
-    a_only = _mk(
-        avro_only_df,
-        "AVRO_ONLY_BINLOG_KEY",
-        F.concat(
-            F.lit("db="), F.coalesce(F.col("database"), empty),
-            F.lit(" table="), F.coalesce(F.col("table"), empty),
-            F.lit(" type="), F.coalesce(F.col("change_type"), empty),
-        ),
-        True,
-    )
-    b_only = _mk(
-        binlog_only_df,
-        "BINLOG_ONLY_DML",
-        F.concat(
-            F.lit("event="), F.col("event_type"),
-            F.lit(" schema="), F.coalesce(F.col("schema"), empty),
-            F.lit(" table="), F.coalesce(F.col("table"), empty),
-        ),
-        True,
-    )
-    return ts_parse_err.unionAll(ts_mismatch).unionAll(gtid).unionAll(ct).unionAll(a_only).unionAll(b_only)
-
-
-def summary(
-    total_avro_records: DataFrame,
-    binlog_prepared: DataFrame,
-    matched: DataFrame,
-    avro_only_df: DataFrame,
-    binlog_only_df: DataFrame,
-) -> DataFrame:
-    """A1 counters + A2 verdict as a single-row DataFrame.
-
-    ``total_avro_records`` is the *raw* avro input (the reference's
-    lineNum counts skipped rows too, compare_timestamps.go:169).
-    """
-    m = matched.agg(
-        F.count("*").alias("matched"),
-        F.sum(F.col("ts_mismatch").cast("long")).alias("ts_mismatches"),
-    )
-    counts = (
-        total_avro_records.agg(F.count("*").alias("total_avro_records"))
-        .crossJoin(binlog_prepared.agg(F.count("*").alias("binlog_build_events")))
-        .crossJoin(m)
-        .crossJoin(avro_only_df.agg(F.count("*").alias("avro_only")))
-        .crossJoin(binlog_only_df.agg(F.count("*").alias("binlog_only")))
-    )
-    return counts.select(
-        "total_avro_records",
-        "binlog_build_events",
-        "matched",
-        F.coalesce(F.col("ts_mismatches"), F.lit(0)).alias("ts_mismatches"),
-        "avro_only",
-        "binlog_only",
-        (
-            (F.coalesce(F.col("ts_mismatches"), F.lit(0)) == 0)
-            & (F.col("avro_only") == 0)
-            & (F.col("binlog_only") == 0)
-        ).alias("consistent"),
     )
 
 
@@ -1707,19 +1576,14 @@ def table_scorecard(
     table-cardinality, so the rollup shuffle carries a handful of rows
     per task at any feed size.  Matched counts are avro-row
     granularity and BINLOG_ONLY counts DML events only, exactly like
-    ``summary``.  Returns (schema_name, table_name, n_matched,
+    ``summary_onepass``.  Returns (schema_name, table_name, n_matched,
     n_ts_mismatch, n_gtid_mismatch, n_change_type_mismatch,
     n_avro_only, n_binlog_only, consistent)."""
     d = diff_joined(binlog_prepared, avro_prepared, cfg)
-    has_avro = F.col("__has_avro").isNotNull()
-    has_binlog = F.col("__has_binlog").isNotNull()
-    matched = has_avro & has_binlog
-    binlog_only_dml = (
-        has_binlog & ~has_avro & F.col("event_type").endswith(_DML_SUFFIX)
-    )
+    matched = _is_matched()
     cnt = lambda c: F.sum(c.cast("long")).alias  # noqa: E731
     out = (
-        d.filter(has_avro | binlog_only_dml)
+        d.filter(F.col("__has_avro").isNotNull() | _is_binlog_only())
         .groupBy(
             F.coalesce(F.col("database"), F.col("binlog_schema")).alias(
                 "schema_name"
@@ -1735,8 +1599,8 @@ def table_scorecard(
             cnt(matched & F.col("change_type_mismatch"))(
                 "n_change_type_mismatch"
             ),
-            cnt(has_avro & ~has_binlog)("n_avro_only"),
-            cnt(binlog_only_dml)("n_binlog_only"),
+            cnt(_is_avro_only())("n_avro_only"),
+            cnt(_is_binlog_only())("n_binlog_only"),
         )
     )
     return out.withColumn(
@@ -1768,12 +1632,7 @@ def match_timeline(
     n_matched, n_ts_mismatch, n_avro_only, n_binlog_only,
     match_rate)."""
     d = diff_joined(binlog_prepared, avro_prepared, cfg)
-    has_avro = F.col("__has_avro").isNotNull()
-    has_binlog = F.col("__has_binlog").isNotNull()
-    matched = has_avro & has_binlog
-    binlog_only_dml = (
-        has_binlog & ~has_avro & F.col("event_type").endswith(_DML_SUFFIX)
-    )
+    matched = _is_matched()
     bucket = (
         F.floor(
             F.coalesce(F.col("source_timestamp"), F.col("binlog_ms"))
@@ -1783,13 +1642,13 @@ def match_timeline(
     ).cast("long")
     cnt = lambda c: F.sum(c.cast("long")).alias  # noqa: E731
     out = (
-        d.filter(has_avro | binlog_only_dml)
+        d.filter(F.col("__has_avro").isNotNull() | _is_binlog_only())
         .groupBy(bucket.alias("bucket_ms"))
         .agg(
             cnt(matched)("n_matched"),
             cnt(matched & F.col("ts_mismatch"))("n_ts_mismatch"),
-            cnt(has_avro & ~has_binlog)("n_avro_only"),
-            cnt(binlog_only_dml)("n_binlog_only"),
+            cnt(_is_avro_only())("n_avro_only"),
+            cnt(_is_binlog_only())("n_binlog_only"),
         )
     )
     total = (

@@ -285,31 +285,8 @@ FROM binlog_only_cdc"""
 
 def cdc_findings_stream() -> str:
     """Twin of streaming.compare_stream.streaming_findings run to
-    completion: batch findings minus BINLOG_ONLY (end-of-stream only)
-    and minus the `counted` column, with the streaming detail shapes."""
-    return (
-        _PREFIX
-        + """
-SELECT 'TIMESTAMP_PARSE_ERROR' AS kind, binlog_file, binlog_position,
-       'avro_ms=' || CAST(source_timestamp AS VARCHAR) || ' binlog_ms=null' AS detail
-FROM matched_flagged WHERE binlog_ms IS NULL
-UNION ALL
-SELECT 'TIMESTAMP_MISMATCH', binlog_file, binlog_position,
-       'avro_ms=' || CAST(source_timestamp AS VARCHAR) || ' binlog_ms=' || CAST(binlog_ms AS VARCHAR)
-FROM matched_flagged WHERE binlog_ms IS NOT NULL AND ts_mismatch
-UNION ALL
-SELECT 'GTID_MISMATCH', binlog_file, binlog_position,
-       'avro=' || gtid || ' binlog=' || gtid_next
-FROM matched_flagged WHERE gtid_mismatch
-UNION ALL
-SELECT 'CHANGE_TYPE_MISMATCH', binlog_file, binlog_position,
-       'avro=' || change_type || ' inferred=' || inferred_change_type
-FROM matched_flagged WHERE change_type_mismatch
-UNION ALL
-SELECT 'AVRO_ONLY_BINLOG_KEY', binlog_file, binlog_position,
-       'db=' || coalesce(database, '') || ' table=' || coalesce("table", '')
-FROM avro_only_cdc"""
-    )
+    completion: the batch findings minus the end-of-stream kind."""
+    return f"SELECT * FROM ({cdc_findings()}) WHERE kind <> 'BINLOG_ONLY_DML'"
 
 
 def cdc_summary() -> str:

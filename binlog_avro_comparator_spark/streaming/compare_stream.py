@@ -4,15 +4,17 @@ is its manual watermark, README.md:68-73).
 
 The streaming analogue: CDC avro records arrive continuously (file
 source discovers new JSONL files incrementally); the binlog build side
-is static (closed, rotated files).  Matched-row comparison and the
-avro-only anti check are per-record and stateless, so they stream in
-append mode via a stream-static join.  The binlog-only check is
-inherently end-of-stream (an absent record can always still arrive) --
-it stays a batch op over the accumulated input, exactly like the
+is static (closed, rotated files).  ``streaming_findings`` runs the
+batch comparison kernel (operators/compare.py) as ONE left-outer
+broadcast stream-static join -- same presence markers, comparison
+columns and finding structs as ``findings_onepass`` -- then one
+explode; no union, no state store, append mode.  Matched-row and
+avro-only findings are per-record and stateless.  The binlog-only
+check is inherently end-of-stream (an absent record can always still
+arrive) and never fires on a left-outer join: run to completion, the
+stream's findings are exactly the batch findings minus BINLOG_ONLY_DML.
+That one stays a batch op over the accumulated input, exactly like the
 reference running after its inputs are complete.
-
-Stream-static left_anti is not supported by Spark; the equivalent
-left_outer + null-probe filter is.
 """
 
 from __future__ import annotations
@@ -36,93 +38,13 @@ def streaming_findings(
     avro_stream: DataFrame,
     cfg: C.CompareConfig = C.CompareConfig(),
 ) -> DataFrame:
-    """Streaming findings: TIMESTAMP_* / GTID / CHANGE_TYPE on matched
-    rows plus AVRO_ONLY for keyless probes, one output row per finding,
-    append-mode safe (no stateful aggregation)."""
-    bp = C.prepare_binlog(binlog_static).select(
-        *C.KEY,
-        "event_type",
-        "timestamp",
-        "immediate_commmit_timestamp",
-        "gtid_next",
-    ).withColumn("__build_hit", F.lit(1))
-    ap = C.prepare_avro(avro_stream)
-
-    j = ap.join(F.broadcast(bp), on=C.KEY, how="left_outer")
-    binlog_ms = C.binlog_effective_ms(
-        F.col("immediate_commmit_timestamp"), F.col("timestamp")
-    )
-    inferred = C.inferred_change_type(F.col("event_type"), cfg)
-    j = (
-        j.withColumn("binlog_ms", binlog_ms)
-        .withColumn("ts_delta_ms", F.col("source_timestamp") - F.col("binlog_ms"))
-        .withColumn("inferred_change_type", inferred)
-    )
-    matched = j.filter(F.col("__build_hit").isNotNull())
-    ts_detail = F.concat(
-        F.lit("avro_ms="),
-        F.col("source_timestamp").cast("string"),
-        F.lit(" binlog_ms="),
-        F.coalesce(F.col("binlog_ms").cast("string"), F.lit("null")),
-    )
-
-    def _sel(df: DataFrame, kind: str, detail: F.Column) -> DataFrame:
-        return df.select(F.lit(kind).alias("kind"), *C.KEY, detail.alias("detail"))
-
-    # same per-row multiplicity as the batch findings(): one row per
-    # discrepancy kind, so a record can contribute several findings
-    matched_findings = (
-        _sel(matched.filter(F.col("binlog_ms").isNull()), "TIMESTAMP_PARSE_ERROR", ts_detail)
-        .unionAll(
-            _sel(
-                matched.filter(
-                    F.col("binlog_ms").isNotNull()
-                    & (F.abs(F.col("ts_delta_ms")) > cfg.tolerance_ms)
-                ),
-                "TIMESTAMP_MISMATCH",
-                ts_detail,
-            )
-        )
-        .unionAll(
-            _sel(
-                matched.filter(
-                    F.col("binlog_ms").isNotNull()
-                    & (F.col("gtid") != "")
-                    & F.col("gtid_next").isNotNull() & (F.col("gtid_next") != "")
-                    & (F.col("gtid") != F.col("gtid_next"))
-                ),
-                "GTID_MISMATCH",
-                F.concat(F.lit("avro="), F.col("gtid"), F.lit(" binlog="), F.col("gtid_next")),
-            )
-        )
-        .unionAll(
-            _sel(
-                matched.filter(
-                    F.col("binlog_ms").isNotNull()
-                    & (F.col("change_type") != "")
-                    & (F.col("inferred_change_type") != "")
-                    & (F.upper(F.col("change_type")) != F.col("inferred_change_type"))
-                ),
-                "CHANGE_TYPE_MISMATCH",
-                F.concat(
-                    F.lit("avro="), F.col("change_type"),
-                    F.lit(" inferred="), F.col("inferred_change_type"),
-                ),
-            )
-        )
-    )
-    avro_only_findings = (
-        j.filter(F.col("__build_hit").isNull())
-        .select(
-            F.lit("AVRO_ONLY_BINLOG_KEY").alias("kind"),
-            *C.KEY,
-            F.concat(
-                F.lit("db="), F.coalesce(F.col("database"), F.lit("")),
-                F.lit(" table="), F.coalesce(F.col("table"), F.lit("")),
-            ).alias("detail"),
-        )
-    )
-    return matched_findings.unionAll(avro_only_findings)
+    """Streaming findings: the batch ``findings_onepass`` rows minus the
+    end-of-stream BINLOG_ONLY_DML kind, one output row per finding,
+    append-mode safe (no stateful aggregation).  Returns (kind,
+    binlog_file, binlog_position, detail, counted)."""
+    bp = F.broadcast(C.prepare_binlog(binlog_static))
+    j = C._compared(bp, C.prepare_avro(avro_stream), cfg, "left_outer")
+    return C._explode_findings(j)
 
 
 def streaming_payload_findings(

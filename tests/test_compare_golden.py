@@ -145,9 +145,7 @@ def test_anti_joins(frames):
 
 def test_findings_and_summary(frames):
     avro, bp, ap = frames
-    m = C.matched_pairs(bp, ap)
-    ao, bo = C.avro_only(bp, ap), C.binlog_only(bp, ap)
-    f = C.findings(m, ao, bo)
+    f = C.findings_onepass(bp, ap)
     by_kind = {}
     for r in f.collect():
         by_kind.setdefault(r.kind, []).append(r)
@@ -160,7 +158,7 @@ def test_findings_and_summary(frames):
     assert not by_kind["GTID_MISMATCH"][0].counted      # Q3 report-only
     assert not by_kind["CHANGE_TYPE_MISMATCH"][0].counted
 
-    s = C.summary(avro, bp, m, ao, bo).collect()[0]
+    s = C.summary_onepass(avro, bp, ap).collect()[0]
     assert s.total_avro_records == 11  # includes the F3-skipped row
     assert s.binlog_build_events == 11
     assert s.matched == 9
@@ -168,21 +166,6 @@ def test_findings_and_summary(frames):
     assert s.avro_only == 1
     assert s.binlog_only == 1
     assert not s.consistent
-
-
-@pytest.mark.slow
-def test_onepass_equals_compositional(frames):
-    """findings_onepass/summary_onepass (single full-outer join) must be
-    row-identical to the compositional three-join formulation."""
-    avro, bp, ap = frames
-    m = C.matched_pairs(bp, ap)
-    ao, bo = C.avro_only(bp, ap), C.binlog_only(bp, ap)
-    comp = sorted(tuple(r) for r in C.findings(m, ao, bo).collect())
-    onep = sorted(tuple(r) for r in C.findings_onepass(bp, ap).collect())
-    assert comp == onep
-    s1 = C.summary(avro, bp, m, ao, bo).collect()[0]
-    s2 = C.summary_onepass(avro, bp, ap).collect()[0]
-    assert tuple(s1) == tuple(s2)
 
 
 def test_input_order_invariance(spark, frames):
@@ -207,8 +190,7 @@ def test_all_consistent_verdict(spark):
     )
     avro = spark.createDataFrame([_a(100, ICT_MS)], AVRO_SCHEMA)
     bp, ap = C.prepare_binlog(binlog), C.prepare_avro(avro)
-    m = C.matched_pairs(bp, ap)
-    s = C.summary(avro, bp, m, C.avro_only(bp, ap), C.binlog_only(bp, ap)).collect()[0]
+    s = C.summary_onepass(avro, bp, ap).collect()[0]
     assert s.consistent and s.matched == 1 and s.ts_mismatches == 0
 
 

@@ -121,6 +121,19 @@ def test_streaming_findings_availablenow(spark, io_dirs, tmp_path):
     rows = spark.sql("SELECT * FROM findings_stream").collect()
     kinds = sorted(r.kind for r in rows)
     assert kinds == ["AVRO_ONLY_BINLOG_KEY", "TIMESTAMP_MISMATCH"]
+    # run to completion, the stream is the batch findings over the same
+    # inputs minus the end-of-stream BINLOG_ONLY_DML kind, row for row
+    from binlog_avro_comparator_spark.operators import compare as C
+    from binlog_avro_comparator_spark.schemas import AVRO_JSONL_SCHEMA
+    from binlog_avro_comparator_spark.sources.jsonl import unwrap_avro
+
+    avro = unwrap_avro(
+        spark.read.schema(AVRO_JSONL_SCHEMA).json(str(io_dirs / "avro"))
+    )
+    batch = C.findings_onepass(C.prepare_binlog(binlog), C.prepare_avro(avro))
+    want = batch.filter(F.col("kind") != "BINLOG_ONLY_DML")
+    assert out.columns == batch.columns
+    assert sorted(map(tuple, rows)) == sorted(map(tuple, want.collect()))
 
 
 def test_image_features_plumbing(spark):

@@ -50,14 +50,19 @@ def test_nation_revenue_broadcasts_dims(spark):
     assert plan.count("BroadcastHashJoin") >= 2  # customer and nation
 
 
-def test_diff_joined_is_single_join(spark):
+def test_diff_joined_is_single_join(spark, tmp_path):
     from binlog_avro_comparator_spark.fixtures import (
         derive_avro_rows,
         derive_binlog_events,
     )
+    from binlog_avro_comparator_spark.streaming import (
+        stream_avro_jsonl,
+        streaming_findings,
+    )
 
     ev = load_table(spark, SF, "events")
-    bp = C.prepare_binlog(derive_binlog_events(ev))
+    binlog = derive_binlog_events(ev)
+    bp = C.prepare_binlog(binlog)
     ap = C.prepare_avro(derive_avro_rows(ev))
     import re
 
@@ -69,6 +74,16 @@ def test_diff_joined_is_single_join(spark):
     scan_nodes = re.findall(r"^\(\d+\) Scan parquet", plan, re.M)
     assert len(scan_nodes) == 2, scan_nodes
     assert "FullOuter" in plan
+
+    # the stream-static diff is the same kernel: one left-outer
+    # broadcast join and one explode, no union of per-kind branches
+    (tmp_path / "avro").mkdir()
+    stream = stream_avro_jsonl(spark, str(tmp_path / "avro"))
+    splan = _plan(streaming_findings(binlog, stream))
+    join_nodes = re.findall(r"^\(\d+\) \w*Join", splan, re.M)
+    assert len(join_nodes) == 1, join_nodes
+    assert "BroadcastHashJoin" in join_nodes[0] and "LeftOuter" in splan
+    assert "Union" not in splan
 
 
 def test_top_revenue_orders_is_take_ordered(spark):

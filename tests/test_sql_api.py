@@ -115,3 +115,28 @@ def test_registry_oracle_pairing_is_total_and_ordered():
     assert len(head) == 50 and len(set(head)) == 50
     for name in head:
         assert callable(q[name]) and isinstance(o[name], str) and o[name].strip()
+
+
+@pytest.mark.parametrize("name", ["cdc_findings", "cdc_findings_stream"])
+def test_cdc_findings_match_duckdb_oracle(spark, name):
+    """The batch findings and the streaming findings run to completion
+    equal their DuckDB oracle twins as row multisets, column for
+    column -- the streaming twin being the batch oracle minus the
+    end-of-stream kind."""
+    from collections import Counter
+
+    import duckdb
+
+    df = registry.queries()[name](spark, SF)
+    got = Counter(tuple(r) for r in df.collect())
+    con = duckdb.connect()
+    try:
+        con.execute(f"CREATE VIEW events AS SELECT * FROM '{SF}/events.parquet'")
+        res = con.execute(registry.oracle_sql()[name])
+        cols = [d[0] for d in res.description]
+        want = Counter(res.fetchall())
+    finally:
+        con.close()
+    assert df.columns == cols
+    assert got, name
+    assert got == want, (got - want, want - got)
